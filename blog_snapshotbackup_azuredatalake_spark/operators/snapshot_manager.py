@@ -8,16 +8,23 @@ Spark's writers are storage-agnostic).
 
 Layout under ``backup_root``::
 
-    <table>/snap_<id>/data/      full rows (snapshot 0) or delta rows
-    <table>/snap_<id>/manifest/  (key, row_md5) parquet
-    <table>/snap_<id>/meta.json  {id, base, kind}
+    <table>/snap_<id>/data/      full rows, or delta rows + _tombstone
+    <table>/snap_<id>/manifest/  (key, row_md5) parquet, FULL snapshots only
+    <table>/snap_<id>/meta.json  {id, base, kind, key, schema}
 
-Incremental snapshots are *differential*: each stores changed+added rows
-plus tombstones relative to the latest FULL snapshot, so restore is a
-single two-way merge (base + one delta, newest version per key winning
-via a row_number window) and retention can drop any intermediate delta
-without breaking later ones. All heavy operations are manifest
-hash-joins: row payloads move only when they actually changed.
+``meta.json`` records the table schema at write time, so no store read
+infers one. Incremental snapshots are *differential*: each stores
+changed+added rows plus tombstones relative to the latest FULL snapshot,
+so retention can drop any intermediate delta without breaking later
+ones; ``commit_delta`` chains deltas onto the previous snapshot instead.
+Restore is one fold for both: one scan of every delta in the chain,
+then a key anti-join that keeps, of the base rows and the delta rows,
+only those no newer delta supersedes (the newest delta row per key
+replaces the base row), plus their union. While the deltas' keys fit a
+broadcast the base is streamed, never shuffled, and the job count does
+not grow with chain depth. Verify runs the same fold over the base's
+manifest. All heavy operations are manifest hash-joins: row payloads
+move only when they actually changed.
 """
 
 from __future__ import annotations
@@ -26,8 +33,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from blog_snapshotbackup_azuredatalake_spark.scratch import scratch_dir
 from blog_snapshotbackup_azuredatalake_spark.functions.hashing import row_hash
@@ -61,12 +69,127 @@ class SnapshotManager:
         with open(self._meta_path(table, snap_id)) as f:
             return json.load(f)
 
+    def _publish(self, op: str, table: str, meta: dict, **add) -> int:
+        """Write the snapshot's meta.json, then commit its 'add' to the
+        transaction log — the log commit is the atomic publish point."""
+        sid = meta["id"]
+        os.makedirs(self._dir(table, sid), exist_ok=True)
+        with open(self._meta_path(table, sid), "w") as f:
+            json.dump(meta, f)
+        self.log.commit(
+            op,
+            [
+                {
+                    "add": {
+                        "path": f"{table}/snap_{sid:06d}",
+                        "table": table,
+                        "snap_id": sid,
+                        "kind": meta["kind"],
+                        **add,
+                    }
+                }
+            ],
+        )
+        return sid
+
     # -- manifest ---------------------------------------------------------
     @staticmethod
     def _manifest(df: DataFrame, key: str) -> DataFrame:
         cols = sorted(df.columns)
         return df.select(
             F.col(key).alias("key"), row_hash(*cols).alias("row_md5")
+        )
+
+    def _read_manifest(self, table: str, meta: dict) -> DataFrame:
+        """A full snapshot's stored manifest, typed from its meta.json."""
+        key_type = StructType.fromJson(meta["schema"])[meta["key"]].dataType
+        return self.spark.read.schema(
+            f"key {key_type.simpleString()}, row_md5 string"
+        ).parquet(f"{self._dir(table, meta['id'])}/manifest")
+
+    # -- chain fold (restore, verify, rebase) ------------------------------
+    def _chain(self, table: str, snap_id: int) -> list[tuple[str, dict]]:
+        """(table, meta) of every snapshot the state at `snap_id` is
+        built from, base full snapshot first; shallow clones resolve
+        through their pointer."""
+        chain = []
+        cur: int | None = snap_id
+        while cur is not None:
+            meta = self._read_meta(table, cur)
+            if meta["kind"] == "clone":
+                table, cur = meta["src_table"], meta["src_snap"]
+                continue
+            chain.append((table, meta))
+            cur = meta["base"]
+        return chain[::-1]
+
+    def _fold(
+        self, table: str, snap_id: int, manifest: bool = False
+    ) -> tuple[DataFrame, str]:
+        """The table state at `snap_id` — its rows, or with `manifest`
+        its (key, row_md5) manifest — and the key column. Reads the base
+        full snapshot, and every delta of the chain in ONE scan with the
+        schema meta.json recorded. A base or delta row survives unless a
+        newer delta holds its key (one key anti-join against the deltas'
+        (key, depth) pairs); the base survivors and the live delta rows
+        are the union. No window, no schema inference: while the delta
+        keys fit a broadcast, nothing shuffles and the job count is the
+        same at any chain depth. Keys must be unique within a table
+        state."""
+        chain = self._chain(table, snap_id)
+        (base_table, base), deltas = chain[0], chain[1:]
+        key = base["key"]
+        if manifest:
+            state, state_key = self._read_manifest(base_table, base), "key"
+        else:
+            state = self.spark.read.schema(
+                StructType.fromJson(base["schema"])
+            ).parquet(f"{self._dir(base_table, base['id'])}/data")
+            state_key = key
+        if not deltas:
+            return state, key
+        # chain position of the snapshot a row was read from (base: -1);
+        # the base's depth is per-row, not a literal, so the anti-join
+        # keeps one condition and both union sides share one broadcast
+        dirs = [f"{t}/snap_{m['id']:06d}" for t, m in chain]
+        depth = F.create_map(
+            *(F.lit(v) for i, d in enumerate(dirs, -1) for v in (d, i))
+        )[
+            # .../<table>/snap_<id>/<data|manifest>/<file> -> <table>/snap_<id>
+            F.substring_index(
+                F.substring_index(F.col("_metadata.file_path"), "/", -4),
+                "/",
+                2,
+            )
+        ]
+        head = StructType.fromJson(chain[-1][1]["schema"])
+        tomb = StructField("_tombstone", BooleanType())
+        rows = (
+            self.spark.read.schema(StructType(head.fields + [tomb]))
+            .parquet(*(f"{self.root}/{d}/data" for d in dirs[1:]))
+            .withColumn("_depth", depth)
+        )
+        newer = rows.select(
+            F.col(key).alias("_k"), F.col("_depth").alias("_d")
+        )
+        if manifest:
+            rows = rows.select(
+                F.col(key).alias("key"),
+                row_hash(*sorted(head.fieldNames())).alias("row_md5"),
+                "_tombstone",
+                "_depth",
+            )
+        state = state.withColumns(
+            {"_tombstone": F.lit(False), "_depth": depth}
+        ).unionByName(rows)
+        superseded = (F.col(state_key) == F.col("_k")) & (
+            F.col("_d") > F.col("_depth")
+        )
+        return (
+            state.join(newer, superseded, "left_anti")
+            .filter(~F.col("_tombstone"))
+            .drop("_tombstone", "_depth"),
+            key,
         )
 
     # -- snapshot ---------------------------------------------------------
@@ -80,18 +203,21 @@ class SnapshotManager:
         ids = self.snapshot_ids(table)
         snap_id = (ids[-1] + 1) if ids else 0
         d = self._dir(table, snap_id)
+        meta = {
+            "id": snap_id,
+            "base": None,
+            "kind": "full",
+            "key": key,
+            "schema": df.schema.jsonValue(),
+        }
         if not ids or force_full:
             df.write.mode("errorifexists").parquet(f"{d}/data")
             self._manifest(df, key).write.parquet(f"{d}/manifest")
-            meta = {"id": snap_id, "base": None, "kind": "full", "key": key}
         else:
-            base_id = max(
-                i for i in ids if self._read_meta(table, i)["kind"] == "full"
-            )
-            prev = self.spark.read.parquet(
-                f"{self._dir(table, base_id)}/manifest"
-            )
-            cur = self._manifest(df, key).cache()
+            metas = (self._read_meta(table, i) for i in ids)
+            base = [m for m in metas if m["kind"] == "full"][-1]
+            prev = self._read_manifest(table, base)
+            cur = self._manifest(df, key)
             # changed+added rows: manifest anti-join, then semi-join the
             # payload — only rows that differ are read out of the source
             changed_keys = cur.join(prev, ["key", "row_md5"], "left_anti")
@@ -114,31 +240,8 @@ class SnapshotManager:
             delta.unionByName(removed.select(delta.columns)).write.parquet(
                 f"{d}/data"
             )
-            cur.write.parquet(f"{d}/manifest")
-            cur.unpersist()
-            meta = {
-                "id": snap_id,
-                "base": base_id,
-                "kind": "incremental",
-                "key": key,
-            }
-        os.makedirs(d, exist_ok=True)
-        with open(self._meta_path(table, snap_id), "w") as f:
-            json.dump(meta, f)
-        self.log.commit(
-            "snapshot",
-            [
-                {
-                    "add": {
-                        "path": f"{table}/snap_{snap_id:06d}",
-                        "table": table,
-                        "snap_id": snap_id,
-                        "kind": meta["kind"],
-                    }
-                }
-            ],
-        )
-        return snap_id
+            meta.update(base=base["id"], kind="incremental")
+        return self._publish("snapshot", table, meta)
 
     # -- delta commit (the O(|changes|) CDC-apply path) --------------------
     def commit_delta(self, changes: DataFrame, table: str, key: str) -> int:
@@ -151,36 +254,27 @@ class SnapshotManager:
         STATES and so costs O(|table|) per call — the delta's base is
         the PREVIOUS snapshot (full or delta), so ``restore`` folds the
         whole chain newest-version-per-key and ``rebase`` compacts long
-        chains back to one full snapshot. The manifest stored alongside
-        covers only the delta's live rows (a chain head's full manifest
-        is derivable by restore; storing one per delta would itself be
-        an O(|table|) write)."""
+        chains back to one full snapshot. No manifest is stored: only
+        full snapshots keep one, and ``verify`` folds the chain's deltas
+        over it."""
         ids = self.snapshot_ids(table)
         if not ids:
             raise ValueError("commit_delta needs an existing base snapshot")
         snap_id = ids[-1] + 1
-        d = self._dir(table, snap_id)
-        changes.write.mode("errorifexists").parquet(f"{d}/data")
-        live = changes.filter(~F.col("_tombstone")).drop("_tombstone")
-        self._manifest(live, key).write.parquet(f"{d}/manifest")
-        meta = {"id": snap_id, "base": ids[-1], "kind": "delta", "key": key}
-        os.makedirs(d, exist_ok=True)
-        with open(self._meta_path(table, snap_id), "w") as f:
-            json.dump(meta, f)
-        self.log.commit(
-            "snapshot",
-            [
-                {
-                    "add": {
-                        "path": f"{table}/snap_{snap_id:06d}",
-                        "table": table,
-                        "snap_id": snap_id,
-                        "kind": "delta",
-                    }
-                }
-            ],
+        changes.write.mode("errorifexists").parquet(
+            f"{self._dir(table, snap_id)}/data"
         )
-        return snap_id
+        schema = StructType(
+            [f for f in changes.schema.fields if f.name != "_tombstone"]
+        )
+        meta = {
+            "id": snap_id,
+            "base": ids[-1],
+            "kind": "delta",
+            "key": key,
+            "schema": schema.jsonValue(),
+        }
+        return self._publish("snapshot", table, meta)
 
     def rebase(self, table: str) -> int:
         """Compact the head delta chain into a fresh FULL snapshot (the
@@ -190,12 +284,9 @@ class SnapshotManager:
         Cost: one O(|table|) fold — scheduled periodically, it
         amortizes over the many O(|changes|) ``commit_delta`` calls in
         between (the Delta Lake checkpoint/compaction pattern)."""
-        head = self.snapshot_ids(table)[-1]
-        key = self._read_meta(table, head)["key"]
-        df = self.restore(table, head)
+        df, key = self._fold(table, self.snapshot_ids(table)[-1])
         return self.snapshot(df, table, key, force_full=True)
 
-    # -- restore ----------------------------------------------------------
     # -- clone ------------------------------------------------------------
     def clone(self, table: str, snap_id: int, new_table: str) -> int:
         """Delta-style SHALLOW CLONE: publish `new_table`'s snapshot 0
@@ -211,72 +302,33 @@ class SnapshotManager:
         shallow clones."""
         self._read_meta(table, snap_id)  # must exist
         ids = self.snapshot_ids(new_table)
-        new_id = (ids[-1] + 1) if ids else 0
-        d = self._dir(new_table, new_id)
-        os.makedirs(d, exist_ok=True)
         meta = {
-            "id": new_id,
+            "id": (ids[-1] + 1) if ids else 0,
             "base": None,
             "kind": "clone",
             "src_table": table,
             "src_snap": snap_id,
         }
-        with open(self._meta_path(new_table, new_id), "w") as f:
-            json.dump(meta, f)
-        self.log.commit(
-            "clone",
-            [
-                {
-                    "add": {
-                        "path": f"{new_table}/snap_{new_id:06d}",
-                        "table": new_table,
-                        "snap_id": new_id,
-                        "kind": "clone",
-                        "src": f"{table}/snap_{snap_id:06d}",
-                    }
-                }
-            ],
+        return self._publish(
+            "clone", new_table, meta, src=f"{table}/snap_{snap_id:06d}"
         )
-        return new_id
 
+    # -- restore ----------------------------------------------------------
     def restore(self, table: str, snap_id: int) -> DataFrame:
-        """Materialize the table state at `snap_id`: replay deltas onto
-        the base full snapshot, newest version per key winning; shallow
-        clones resolve through their pointer first."""
-        meta = self._read_meta(table, snap_id)
-        if meta.get("kind") == "clone":
-            return self.restore(meta["src_table"], meta["src_snap"])
-        chain: list[dict] = []
-        cur: int | None = snap_id
-        while cur is not None:
-            meta = self._read_meta(table, cur)
-            chain.append(meta)
-            cur = meta["base"]
-        chain.reverse()  # base full snapshot first
-        key = chain[0]["key"]
-        parts = []
-        for depth, meta in enumerate(chain):
-            df = self.spark.read.parquet(f"{self._dir(table, meta['id'])}/data")
-            if "_tombstone" not in df.columns:
-                df = df.withColumn("_tombstone", F.lit(False))
-            parts.append(df.withColumn("_version", F.lit(depth)))
-        all_rows = parts[0]
-        for p in parts[1:]:
-            all_rows = all_rows.unionByName(p)
-        w = Window.partitionBy(key).orderBy(F.col("_version").desc())
-        return (
-            all_rows.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (~F.col("_tombstone")))
-            .drop("_rn", "_version", "_tombstone")
-        )
+        """Materialize the table state at `snap_id`: the chain's deltas
+        folded onto the base full snapshot, newest version per key
+        winning (keys are unique within a table state); shallow clones
+        resolve through their pointer first. The plan holds one read of
+        the base and one of all deltas, whatever the chain depth."""
+        return self._fold(table, snap_id)[0]
 
     # -- verify -----------------------------------------------------------
     def verify(self, df: DataFrame, table: str, snap_id: int) -> dict:
         """Compare live data against a snapshot via manifests: returns
-        counts of matching / changed / missing / extra keys. Shuffles
-        only (key, hash) pairs."""
-        key = self._read_meta(table, snap_id)["key"]
-        snap = self.spark.read.parquet(f"{self._dir(table, snap_id)}/manifest")
+        counts of matching / changed / missing / extra keys. The
+        snapshot side is the base's stored manifest with the chain's
+        deltas folded over it. Shuffles only (key, hash) pairs."""
+        snap, key = self._fold(table, snap_id, manifest=True)
         live = self._manifest(df, key)
         j = live.alias("l").join(
             snap.alias("s"), F.col("l.key") == F.col("s.key"), "full_outer"
@@ -732,16 +784,10 @@ def snap_restore_drill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = []
     for ver, (sid, direct) in enumerate(zip(sids, (v0, v1, v2))):
-        chain_len, cur = 0, sid
-        while cur is not None:
-            meta = mgr._read_meta("orders", cur)
-            chain_len += 1
-            cur = meta["base"]
         rn, rx = fingerprint(mgr.restore("orders", sid))
         dn, dx = fingerprint(direct)
-        rows.append(
-            (ver, chain_len, rn, rx, rn == dn and rx == dx)
-        )
+        chain_len = len(mgr._chain("orders", sid))
+        rows.append((ver, chain_len, rn, rx, rn == dn and rx == dx))
     return spark.createDataFrame(
         rows,
         "version int, chain_len int, n_rows bigint, xor_checksum bigint,"

@@ -75,7 +75,9 @@ def compact_files(
     staging directory rename.
 
     Verified safe: the rewrite is checksummed against the original
-    before the swap; on mismatch the original is left untouched."""
+    before the swap; on mismatch the original is left untouched. The
+    original's signature is taken once, before the rewrite, and also
+    sizes it; the staging copy is read back with the original's schema."""
     import os
     import shutil
 
@@ -90,10 +92,12 @@ def compact_files(
     df = spark.read.parquet(path)
     n_before = count_parquet(path)
     staging = f"{path}__compacting"
-    n_rows = df.count()
+    before = _signature(df)
+    n_rows = before[0]
     n_files = max(1, -(-n_rows // target_rows_per_file))
     df.repartition(n_files).write.mode("errorifexists").parquet(staging)
-    if not verify_copy(spark, df, staging):  # pragma: no cover
+    after = _signature(spark.read.schema(df.schema).parquet(staging))
+    if after != before:  # pragma: no cover
         shutil.rmtree(staging)
         raise RuntimeError(f"compaction checksum mismatch for {path}")
     backup = f"{path}__precompact"
@@ -143,23 +147,24 @@ def verify_copy(
 ) -> bool:
     """Cheap full verify of a copy: count + order-insensitive checksum
     over all columns on both sides (two scans, four numbers shuffled)."""
+    target_df = spark.read.parquet(target).select(*source.columns)
+    return _signature(source) == _signature(target_df)
 
-    def sig(df: DataFrame) -> tuple:
-        cols = sorted(df.columns)
-        h = row_hash_int(*cols)
-        row = (
-            df.select(h.alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr("bit_xor(h)").alias("x"),
-                F.min("h").alias("mn"),
-                F.max("h").alias("mx"),
-            )
-            .collect()[0]
+
+def _signature(df: DataFrame) -> tuple:
+    """(rows, bit_xor, min, max) of the row hash over all columns."""
+    h = row_hash_int(*sorted(df.columns))
+    row = (
+        df.select(h.alias("h"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr("bit_xor(h)").alias("x"),
+            F.min("h").alias("mn"),
+            F.max("h").alias("mx"),
         )
-        return tuple(row)
-
-    return sig(source) == sig(spark.read.parquet(target).select(*source.columns))
+        .collect()[0]
+    )
+    return tuple(row)
 
 
 def snap_copy_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,14 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _dir_bytes(path):
+    return sum(
+        os.path.getsize(os.path.join(r, f))
+        for r, _, fs in os.walk(path)
+        for f in fs
+    )
+
+
 def test_lifecycle(spark, mgr):
     orders = load_table(spark, SF_DIR, "orders")
     s0 = mgr.snapshot(orders, "orders", "o_orderkey")
@@ -40,9 +48,12 @@ def test_lifecycle(spark, mgr):
     s1 = mgr.snapshot(v2, "orders", "o_orderkey")
     assert s1 == 1
 
-    # delta stored, not a full copy
+    # delta stored, not a full copy; only full snapshots keep a manifest
     delta = spark.read.parquet(f"{mgr._dir('orders', 1)}/data")
     assert 0 < delta.count() < orders.count()
+    assert not os.path.exists(f"{mgr._dir('orders', 1)}/manifest")
+    full_b = _dir_bytes(mgr._dir("orders", 0))
+    assert _dir_bytes(mgr._dir("orders", 1)) < full_b / 2
 
     # restores reproduce both states exactly
     assert _sorted_rows(mgr.restore("orders", 0)) == _sorted_rows(orders)
@@ -151,6 +162,11 @@ def test_shallow_clone_zero_copy_and_isolated(spark, mgr):
     assert mgr.restore("t_dev", cid).count() == 200
     # the clone is log-live: vacuum deletes nothing
     assert not any(r["deleted"] for r in mgr.vacuum(min_age_seconds=0.0))
+    # verify and rebase resolve through the pointer too
+    assert mgr.verify(orders, "t_dev", cid)["ok"]
+    rid = mgr.rebase("t_dev")
+    assert mgr._read_meta("t_dev", rid)["kind"] == "full"
+    assert _sorted_rows(mgr.restore("t_dev", rid)) == _sorted_rows(orders)
 
 
 def test_snap_clone_certificate(spark):
@@ -160,14 +176,6 @@ def test_snap_clone_certificate(spark):
 
     rows = {r["check"]: r["ok"] for r in snap_clone(spark, SF_DIR).collect()}
     assert rows and all(rows.values()), rows
-
-
-def _dir_bytes(path):
-    return sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _, fs in os.walk(path)
-        for f in fs
-    )
 
 
 def test_commit_delta_chain_and_rebase(spark, mgr):
@@ -211,6 +219,9 @@ def test_commit_delta_chain_and_rebase(spark, mgr):
     )
     assert _sorted_rows(mgr.restore("t", s1)) == _sorted_rows(v1)
     assert _sorted_rows(mgr.restore("t", s2)) == _sorted_rows(v2)
+    # each chain head verifies against the state it restores
+    assert mgr.verify(v1, "t", s1)["ok"]
+    assert mgr.verify(v2, "t", s2)["ok"]
 
     # write volume ∝ |changes|: each delta dir is a small fraction of
     # the full snapshot dir on disk (rows AND bytes)
@@ -229,6 +240,41 @@ def test_commit_delta_chain_and_rebase(spark, mgr):
     purged = mgr.purge("t", keep_last=1)
     assert sorted(purged) == [0, s1, s2]
     assert _sorted_rows(mgr.restore("t", rid)) == _sorted_rows(v2)
+
+
+def test_restore_jobs_do_not_grow_with_chain_depth(spark, mgr):
+    """Restore reads every delta of a chain in one scan with the schema
+    meta.json recorded: a chain of six deltas launches as many Spark
+    jobs as a chain of one, and the newest delta row per key wins."""
+    orders = load_table(spark, SF_DIR, "orders")
+    mgr.snapshot(orders, "t", "o_orderkey")
+    heads = [
+        mgr.commit_delta(
+            orders.filter(F.col("o_orderkey") % 3 == i % 3)
+            .withColumn("o_totalprice", F.col("o_totalprice") + float(i))
+            .withColumn("_tombstone", F.lit(False)),
+            "t",
+            "o_orderkey",
+        )
+        for i in range(6)
+    ]
+    sc = spark.sparkContext
+
+    def restore_jobs(sid):
+        group = f"restore_depth_{sid}"
+        sc.setJobGroup(group, group)
+        try:
+            mgr.restore("t", sid).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert restore_jobs(heads[0]) == restore_jobs(heads[-1])
+    # keys ≡ r (mod 3) were last updated by delta r + 3
+    want = orders.withColumn(
+        "o_totalprice", F.col("o_totalprice") + (F.col("o_orderkey") % 3 + 3)
+    )
+    assert _sorted_rows(mgr.restore("t", heads[-1])) == _sorted_rows(want)
 
 
 def test_restore_drill_matches_oracle(spark, ddb):
