@@ -19,6 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    Panel,
+    dot_product,
+    vector_lit,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 K = 8
@@ -35,43 +40,16 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     same task — at 100 TB that exchange IS the cost of the iteration.
     The per-dim fold keeps the oracle's list_reduce association order,
     so assignments stay bit-identical."""
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    # one literal array<struct> bound as a column (constant-folded once;
-    # inlining the k×d literal tree per consumer bloats planning/eval)
-    cents_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(c["centroid_id"]))
-                .cast("bigint")
-                .alias("centroid_id"),
-                F.array(*[F.lit(float(v)) for v in c["c_emb"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-    scored = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    c["c_emb"],
-                    lambda x, y: (x.cast("double") - y)
-                    * (x.cast("double") - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d2"),
-            c["centroid_id"].alias("centroid_id"),
-        ),
-    )
+    panel = Panel(sorted(centroids.collect(), key=lambda r: r["centroid_id"]))
     # two-step select: `best` must be a bound column before its fields
     # are projected, or the whole argmin array is re-evaluated per field
     return (
-        emb.withColumn("cents", cents_lit)
-        .select("vec_id", "embedding", F.array_min(scored).alias("best"))
+        panel.bind(emb)
+        .select(
+            "vec_id",
+            "embedding",
+            F.array_min(panel.l2sq(F.col("embedding"))).alias("best"),
+        )
         .select(
             "vec_id",
             F.col("best.centroid_id").alias("centroid_id"),
@@ -188,21 +166,12 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = [1.0 / d**0.5] * d
     lam = 0.0
     for _ in range(PCA_ITER):
-        vlit = F.array(*[F.lit(float(x)) for x in v])
         mu_dot_v = sum(mi * vi for mi, vi in zip(mu, v))
         # bind the projection as a real column first (HOF-inlining trap)
         proj = emb.select(
             "embedding",
             (
-                F.aggregate(
-                    F.zip_with(
-                        F.col("embedding"),
-                        vlit,
-                        lambda x, y: x.cast("double") * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
+                dot_product("embedding", vector_lit(v))
                 - F.lit(float(mu_dot_v))
             ).alias("s"),
         )

@@ -26,6 +26,13 @@ from pyspark.sql import functions as F
 from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
     broadcast_if_bounded as bcast,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    Panel,
+    cosine_normed,
+    cosine_similarity,
+    normed,
+    sql_cos,
+)
 from blog_snapshotbackup_azuredatalake_spark.operators.dedup import _hash60
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
@@ -148,8 +155,6 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id < N_CENTROIDS (a deterministic seed set — in a real pipeline,
     the previous Lloyd iteration's output). Centroids broadcast; the
     corpus scans once with no shuffle until the final stats group-by."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import _dot_cos
-
     emb = load_table(spark, sf_dir, "embeddings")
     # MAP-ONLY argmax: the centroid seed set is tiny and driver-known,
     # so it becomes a literal struct array and each row picks its best
@@ -158,7 +163,7 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no per-vector groupBy: the corpus meets its ONLY shuffle at the
     # k-row stats aggregation.
     # round 10 NEGATIVE A/B, kept as-was by measurement: the norm hoist
-    # that won 1.5–3.5× on the pair-join scorers (`_dot_cos_pre`)
+    # that won 1.5–3.5× on the pair-join scorers (`cosine_normed`)
     # REGRESSED here (sf60de min-of-3: 1.56 → 2.39 s, consistent across
     # runs). Mechanism: inside this centroid-literal lambda the
     # centroid norm is a fold over a FOLDABLE literal — ConstantFolding
@@ -174,28 +179,10 @@ def emb_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect(),
         key=lambda r: r["centroid_id"],
     )
-    cents_lit = F.array(
-        *[
-            F.struct(
-                (-F.lit(int(c["centroid_id"])))
-                .cast("bigint")
-                .alias("neg_id"),
-                F.array(*[F.lit(float(v)) for v in c["embedding"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-    scored = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            _dot_cos(F.col("embedding"), c["c_emb"]).alias("cos"),
-            c["neg_id"].alias("neg_id"),
-        ),
-    )
+    panel = Panel(((-cid, v) for cid, v in cents), "neg_id")
+    scored = panel.scored(lambda c: cosine_similarity("embedding", c), "cos")
     best = (
-        emb.withColumn("cents", cents_lit)
+        panel.bind(emb)
         .select("vec_id", "label", F.array_max(scored).alias("best"))
         .select(
             "vec_id",
@@ -241,10 +228,6 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_centroid_assign (centroid literal rides into the scan, the
     corpus never shuffles for the argmax); the (centroid, label)
     count relation is k·|labels| rows, everything after is k-sized."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _dot_cos,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = sorted(
         emb.filter(F.col("vec_id") < N_CENTROIDS)
@@ -255,28 +238,10 @@ def emb_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norm hoist NOT applied — same centroid-literal negative A/B as
     # emb_centroid_assign (ConstantFolding already pre-folds the
     # literal's norm; see that entry's comment)
-    cents_lit = F.array(
-        *[
-            F.struct(
-                (-F.lit(int(c["centroid_id"])))
-                .cast("bigint")
-                .alias("neg_id"),
-                F.array(*[F.lit(float(v)) for v in c["embedding"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-    scored = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            _dot_cos(F.col("embedding"), c["c_emb"]).alias("cos"),
-            c["neg_id"].alias("neg_id"),
-        ),
-    )
+    panel = Panel(((-cid, v) for cid, v in cents), "neg_id")
+    scored = panel.scored(lambda c: cosine_similarity("embedding", c), "cos")
     assigned = (
-        emb.withColumn("cents", cents_lit)
+        panel.bind(emb)
         .select(
             "label",
             (-F.array_max(scored)["neg_id"]).alias("centroid_id"),
@@ -339,15 +304,7 @@ FROM per p JOIN maj USING (centroid_id)
 GROUP BY p.centroid_id
 """.format(
     n_cent=N_CENTROIDS,
-    cos="""(
-  list_reduce(list_transform(range(1, 1 + len(e.embedding)),
-    i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.c_emb[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform(e.embedding,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform(c.c_emb,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)""",
+    cos=sql_cos("e.embedding", "c.c_emb"),
 )
 
 
@@ -372,15 +329,7 @@ SELECT centroid_id, COUNT(*) AS n_members,
        COUNT(DISTINCT label) AS n_labels
 FROM best GROUP BY centroid_id
 """.format(
-    cos="""(
-  list_reduce(list_transform(range(1, 1 + len(e.embedding)),
-    i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.c_emb[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform(e.embedding,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform(c.c_emb,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)"""
+    cos=sql_cos("e.embedding", "c.c_emb")
 )
 
 
@@ -396,10 +345,6 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal-struct array (no crossJoin, no per-vector shuffle — the
     corpus meets its only shuffle at the k-row summary). Fixed-point
     floor sums keep the certificate bit-portable (SURVEY §4)."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _dot_cos,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = sorted(
         emb.filter(F.col("vec_id") < N_CENTROIDS)
@@ -410,30 +355,14 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norm hoist NOT applied — measured a wash here (sf60de 1.93 →
     # 1.89 s) for the same centroid-literal reason as
     # emb_centroid_assign's regression (see that entry's comment)
-    cents_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(c["centroid_id"])).cast("bigint").alias("cid"),
-                F.array(*[F.lit(float(v)) for v in c["embedding"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
+    panel = Panel(cents, "cid")
     # sort ascending on (-cos, cid) ≡ the oracle's ORDER BY cos DESC,
     # centroid_id — negation is exact, so the order is bit-identical
     scored = F.sort_array(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (-_dot_cos(F.col("embedding"), c["c_emb"])).alias("nc"),
-                c["cid"].alias("cid"),
-            ),
-        )
+        panel.scored(lambda c: -cosine_similarity("embedding", c), "nc")
     )
     top2 = (
-        emb.withColumn("cents", cents_lit)
+        panel.bind(emb)
         .select("vec_id", scored.alias("s2"))
         .select(
             "vec_id",
@@ -472,22 +401,12 @@ def emb_silhouette_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIL_COS = """(
-  list_reduce(list_transform(range(1, 1 + len(e.embedding)),
-    i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.c_emb[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform(e.embedding,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform(c.c_emb,
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)"""
-
 _EMB_SILHOUETTE_SQL = f"""
 WITH centroids AS (
   SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
   WHERE vec_id < {N_CENTROIDS}
 ), scored AS (
-  SELECT e.vec_id, c.centroid_id, {_SIL_COS} AS cos
+  SELECT e.vec_id, c.centroid_id, {sql_cos("e.embedding", "c.c_emb")} AS cos
   FROM embeddings e CROSS JOIN centroids c
 ), ranked AS (
   SELECT vec_id, centroid_id, cos,
@@ -1295,30 +1214,21 @@ def corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame
     left-associative reduction DuckDB's list_reduce performs, so the
     comparison against {SEM_TAU} and the floor-quantized aggregate are
     bit-identical to the oracle."""
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _dot_cos_pre,
-        _norm,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
+    # per-row norms hoisted below the pair join (round 10,
+    # `cosine_normed`): this scorer folded 3 interpreted HOFs per
+    # (corpus row × bench vec) pair; both norms now fold once per
+    # row, leaving only the dot per pair
+    b = normed("b_emb", "b_nrm", F.col("embedding"))
+    e = normed("embedding", "nrm")
     bench = emb.filter(
         (F.col("vec_id") % SEM_BENCH_MOD == 0)
         & (F.col("vec_id") < SEM_BENCH_MAX_ID)
-    ).select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("b_emb"),
-        # per-row norms hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): this scorer folded 3 interpreted HOFs per
-        # (corpus row × bench vec) pair; both norms now fold once per
-        # row, leaving only the dot per pair
-        _norm(F.col("embedding")).alias("b_nrm"),
-    )
+    ).select(F.col("vec_id").alias("b_id"), *b.cols)
     corpus = emb.filter(
         (F.col("vec_id") % SEM_BENCH_MOD != 0)
         | (F.col("vec_id") >= SEM_BENCH_MAX_ID)
-    ).select(
-        "vec_id", "label", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
+    ).select("vec_id", "label", *e.cols)
     # guarded hint: the bench set is eval-suite-sized in deployment
     # but demo-derived here — past the bound the hint drops (the
     # real escalation at that size is the LSH prefilter above)
@@ -1328,12 +1238,7 @@ def corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame
         .select(
             "vec_id",
             "label",
-            _dot_cos_pre(
-                F.col("embedding"),
-                F.col("b_emb"),
-                F.col("nrm"),
-                F.col("b_nrm"),
-            ).alias("cos"),
+            cosine_normed(e, b).alias("cos"),
         )
         .groupBy("vec_id", "label")
         .agg(F.max("cos").alias("max_cos"))
@@ -1351,10 +1256,6 @@ def corpus_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _decontaminate_semantic_sql() -> str:
-    from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-        _SQL_COS,
-    )
-
     return f"""
 WITH b AS (
   SELECT vec_id, embedding FROM embeddings
@@ -1363,7 +1264,7 @@ WITH b AS (
   SELECT vec_id, embedding, label FROM embeddings
   WHERE vec_id % {SEM_BENCH_MOD} <> 0 OR vec_id >= {SEM_BENCH_MAX_ID}
 ), per_vec AS (
-  SELECT a.vec_id, a.label, MAX({_SQL_COS}) AS max_cos
+  SELECT a.vec_id, a.label, MAX({sql_cos("a.embedding", "b.embedding")}) AS max_cos
   FROM a, b GROUP BY a.vec_id, a.label
 )
 SELECT label, COUNT(*) AS n_corpus,

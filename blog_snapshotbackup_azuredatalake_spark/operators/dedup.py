@@ -30,6 +30,14 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    cosine_normed,
+    dot_product,
+    inline,
+    l2_norm,
+    normed,
+    sql_cos,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 JACCARD_THRESHOLD = 0.5
@@ -1054,48 +1062,6 @@ def _sign_bucket(col: Column, dims: int) -> Column:
     )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Left-to-right fold dot product — the numerator of _dot_cos,
-    exposed so pair-heavy plans can divide by PRECOMPUTED per-row norms
-    (same _norm expression, so the quotient is bit-identical) instead
-    of folding both norm arrays once per candidate pair."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(v: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-
-
-def _dot_cos(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _dot_cos_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """``_dot_cos`` with PRE-COMPUTED norms: na/nb must be the ``_norm``
-    of a/b materialized as columns on each join side, so the quotient
-    divides the SAME doubles — bit-identical cosines. Why it exists
-    (round 10): in a pair scorer (corpus × broadcast query panel) the
-    inline form re-folds both norms once per PAIR; zip_with/aggregate
-    are CodegenFallback (interpreted, boxed per element), so 2/3 of the
-    per-pair fold work is recomputing row-constant values. Hoisting the
-    norms below the join evaluates them once per ROW: sf60de A/B
-    (scripts/cosine_hoist_probe.py, 1.2 M vectors) measured the
-    bruteforce shape 3.71 → 2.29 s min AND collapsed the warm-run
-    spread (3.7–13.1 → 2.3–3.1 s — less per-pair garbage). The probe
-    also rejected the unrolled-element_at dot (15.0 s, 4× WORSE: the
-    64-term chain blows past codegen limits into a worse interpreter),
-    so the lambda fold stays for the dot itself."""
-    return _dot(a, b) / (na * nb)
-
-
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup via canonical bucket anchors (the SemDeDup
     shape, Abbas et al. 2023): block on the sign pattern of the first
@@ -1123,20 +1089,16 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         _sign_bucket(F.col("embedding"), EMB_ANCHOR_DIMS).alias("bucket"),
     )
+    anchor = normed("anchor_emb", "a_nrm")
     anchors = emb.groupBy("bucket").agg(
         F.min("vec_id").alias("anchor_id"),
         F.min_by("embedding", "vec_id").alias("anchor_emb"),
-    ).withColumn("a_nrm", _norm(F.col("anchor_emb")))
+    ).select("bucket", "anchor_id", *anchor.cols)
     # anchor norm hoisted to the ≤ 2^{dims}-row broadcast side
-    # (round 10, `_dot_cos_pre`): every corpus row re-folded it; the
+    # (round 10, `cosine_normed`): every corpus row re-folded it; the
     # row's own norm stays inline — one pair per row, so inline IS
     # once-per-row
-    cos = _dot_cos_pre(
-        F.col("embedding"),
-        F.col("anchor_emb"),
-        _norm(F.col("embedding")),
-        F.col("a_nrm"),
-    )
+    cos = cosine_normed(inline("embedding"), anchor)
     return (
         emb.join(F.broadcast(anchors), "bucket")
         .select("vec_id", "anchor_id", cos.alias("cos"))
@@ -1150,24 +1112,6 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("is_dup"),
         )
     )
-
-
-def _sql_cos(a: str, b: str) -> str:
-    """Sequential left-fold cosine between list columns ``a`` and ``b``
-    — same association order as the Spark ``_dot_cos`` fold, so the
-    doubles are bit-identical across engines (SURVEY §4)."""
-    return f"""(
-  list_reduce(list_transform(range(1, 1 + len({a})),
-    i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),
-    (x, y) -> x + y)
-  / (sqrt(list_reduce(list_transform({a},
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))
-   * sqrt(list_reduce(list_transform({b},
-       v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y)))
-)"""
-
-
-_SQL_COS = _sql_cos("a.embedding", "b.embedding")
 
 
 def _sql_sign_bucket(dims: int) -> str:
@@ -1193,7 +1137,7 @@ anchors AS (
 ),
 scored AS (
   SELECT e.vec_id, a.anchor_id,
-         {_sql_cos('e.embedding', 'a.anchor_emb')} AS cos
+         {sql_cos('e.embedding', 'a.anchor_emb')} AS cos
   FROM emb e JOIN anchors a USING (bucket)
 )
 SELECT vec_id, anchor_id, cos,
@@ -1239,13 +1183,6 @@ def dedup_anchor_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the transform lambda references it (CollapseProject would inline
     # the norm fold per element otherwise — SURVEY §6); pair cosine is
     # then a single zip_with/aggregate fold instead of three.
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
     sample = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < ANCHOR_CAL_N)
@@ -1255,7 +1192,7 @@ def dedup_anchor_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             _sign_bucket(F.col("embedding"), EMB_ANCHOR_DIMS).alias(
                 "bucket"
             ),
-            norm.alias("nrm"),
+            l2_norm("embedding").alias("nrm"),
         )
         .select(
             "vec_id",
@@ -1271,20 +1208,13 @@ def dedup_anchor_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unrolled 64-term element_at sum (the long Add chain bails out of
     # whole-stage codegen and interpreted element_at loses to the fold,
     # 23 s vs 10 s at 1M pairs) — keep the fold, bound the sample.
-    def dot(a: str, b: str) -> Column:
-        return F.aggregate(
-            F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     other = sample.select(
         F.col("vec_id").alias("b_id"), F.col("nv").alias("b_nv")
     )
     truth = (
         sample.crossJoin(F.broadcast(other))
         .filter(F.col("vec_id") != F.col("b_id"))
-        .select("vec_id", dot("nv", "b_nv").alias("cos"))
+        .select("vec_id", dot_product("nv", "b_nv").alias("cos"))
         .agg(
             *[
                 F.count_distinct(
@@ -1301,7 +1231,7 @@ def dedup_anchor_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = (
         sample.join(F.broadcast(anchors), "bucket")
         .filter(F.col("vec_id") != F.col("anchor_id"))
-        .select(dot("nv", "anchor_nv").alias("acos"))
+        .select(dot_product("nv", "anchor_nv").alias("acos"))
         .agg(
             *[
                 F.sum(

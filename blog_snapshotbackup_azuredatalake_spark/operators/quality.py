@@ -31,6 +31,9 @@ from pyspark.sql import functions as F
 from blog_snapshotbackup_azuredatalake_spark.functions.hints import (
     broadcast_if_bounded as bcast,
 )
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    l2_norm_sq,
+)
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
 _DQ_COLS = (
@@ -273,11 +276,7 @@ def dq_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     The norm² fold is the same left-to-right double fold the similarity
     ops use, so the min/max are bit-identical to DuckDB's list_reduce."""
     emb = load_table(spark, sf_dir, "embeddings")
-    norm2 = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
+    norm2 = l2_norm_sq("embedding")
     has_nan = F.exists(
         F.col("embedding"), lambda x: F.isnan(x.cast("double"))
     )

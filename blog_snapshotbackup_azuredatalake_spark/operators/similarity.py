@@ -18,11 +18,9 @@ Three plans for top-k cosine neighbors:
   trade, and unlike the sign-LSH it degrades gracefully (more probes →
   more recall) without re-bucketing.
 
-Dot products run as zip_with/aggregate double folds — bit-identical to
-the DuckDB oracle's list_reduce fold (verified). These higher-order
-functions are CodegenFallback (interpreted), which is why every pair
-scorer hoists row-constant norms out of the per-pair expression
-(`_dot_cos_pre`, round 10).
+All vector math (folds, hoisted-norm cosine, centroid panel and their
+DuckDB twins) comes from ``functions/vectors.py``; its docstring
+carries the fold-order, CodegenFallback and norm-hoist rationale.
 """
 
 from __future__ import annotations
@@ -31,16 +29,22 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from blog_snapshotbackup_azuredatalake_spark.operators.dedup import (
-    _dot_cos,
-    _dot_cos_pre,
-    _norm,
     _sign_bucket,
-    _sql_cos,
     _SQL_BUCKET,
-    _SQL_COS,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.skew import (
     two_phase_rank_dual,
+)
+from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    Panel,
+    cosine_normed,
+    cosine_similarity,
+    inline,
+    l2_distance_sq,
+    normed,
+    sql_cos,
+    sql_l2sq,
+    vectors_lit,
 )
 from blog_snapshotbackup_azuredatalake_spark.sources.catalog import load_table
 
@@ -92,14 +96,13 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("c_emb"),
     )
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cents_lit = _cents_lit_of(cents)
+    panel = Panel(sorted(centroids.collect(), key=lambda r: r["centroid_id"]))
     assigned = (
-        emb.withColumn("cents", cents_lit)
+        panel.bind(emb)
         .select(
             "vec_id",
             "embedding",
-            F.array_min(_cent_scored(F.col("embedding"))).alias("best"),
+            F.array_min(panel.l2sq(F.col("embedding"))).alias("best"),
         )
         .select(
             "vec_id",
@@ -113,33 +116,26 @@ def ann_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # most corpus rows never match and a corpus-side norm column would
     # cost more rows than it saves (the ann_topk_lsh selective-join
     # argument).
+    q = normed("q_emb", "q_nrm", F.col("embedding"))
     probes = (
-        emb.filter(F.col("vec_id") == HYBRID_QUERY_ID)
-        .withColumn("cents", cents_lit)
+        panel.bind(emb.filter(F.col("vec_id") == HYBRID_QUERY_ID))
         .select(
-            F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_nrm"),
+            *q.cols,
             F.explode(
                 F.slice(
-                    F.array_sort(_cent_scored(F.col("embedding"))),
+                    F.array_sort(panel.l2sq(F.col("embedding"))),
                     1,
                     IVF_NPROBE,
                 )
             ).alias("pr"),
         )
-        .select("q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id"))
+        .select(*q.names, F.col("pr.centroid_id").alias("list_id"))
     )
     scored = (
         assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != HYBRID_QUERY_ID)
         .select(
-            "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                _norm(F.col("embedding")),
-            ).alias("cos"),
+            "vec_id", cosine_normed(q, inline("embedding")).alias("cos")
         )
     )
     wv = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -193,7 +189,7 @@ def _hybrid_rrf_sql() -> str:
         _bm25_sql,
     )
 
-    cos = _SQL_COS.replace("a.embedding", "q_emb")
+    cos = sql_cos("q_emb", "b.embedding")
     # the vec list mirrors the Spark side's IVF shortlist: coarse
     # assign ≡ row_number over (l2², centroid_id), probe the query's
     # IVF_NPROBE nearest lists, exact cosine re-rank inside them
@@ -207,7 +203,7 @@ cent AS (
   FROM (SELECT e.vec_id, e.embedding, c.centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("e.embedding", "c.c_emb")},
                           c.centroid_id) AS rn
         FROM embeddings e CROSS JOIN cent c)
   WHERE rn = 1
@@ -215,7 +211,7 @@ cent AS (
   SELECT q_emb, list_id
   FROM (SELECT q.embedding AS q_emb, c.centroid_id AS list_id,
                ROW_NUMBER() OVER (
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("q.embedding", "c.c_emb")},
                           c.centroid_id) AS pr
         FROM embeddings q CROSS JOIN cent c
         WHERE q.vec_id = {HYBRID_QUERY_ID})
@@ -245,30 +241,19 @@ FROM fused QUALIFY rank <= {HYBRID_TOPK}
 def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine neighbors for the first N_QUERIES vectors.
     Norms are hoisted to per-row columns on both sides of the pair
-    join (round 10, `_dot_cos_pre`): same folds, same quotient —
+    join (round 10, `cosine_normed`): same folds, same quotient —
     bit-identical — but evaluated once per row instead of once per
     pair (sf60de 3.71 → 2.29 s, warm spread collapsed)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
+    e = normed("embedding", "nrm")
+    q = e.renamed("q_emb", "q_nrm")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", *e.cols)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), *q.cols
     )
     pairs = (
         emb.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
-        )
+        .select("q_id", "vec_id", cosine_normed(q, e).alias("cos"))
     )
     # round 10: left as a single window — Spark 4.1 plans this
     # rank+filter shape with WindowGroupLimit(Partial) before the
@@ -287,7 +272,7 @@ WITH queries AS (
   SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
   WHERE vec_id < {N_QUERIES}
 ), pairs AS (
-  SELECT q_id, b.vec_id AS vec_id, {_SQL_COS.replace("a.embedding", "q_emb").replace("b.embedding", "b.embedding")} AS cos
+  SELECT q_id, b.vec_id AS vec_id, {sql_cos("q_emb", "b.embedding")} AS cos
   FROM queries JOIN embeddings b ON b.vec_id <> q_id
 )
 SELECT q_id, vec_id, cos, CAST(rnk AS INT) AS rnk
@@ -318,11 +303,9 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         _sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
     )
+    q = normed("q_emb", "q_nrm", F.col("embedding"))
     base_q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        "bucket",
-        _norm(F.col("embedding")).alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), q.cols[0], "bucket", q.cols[1]
     )
     flip = F.expr(
         "CASE WHEN i = 0 THEN bucket ELSE concat(substring(bucket, 1, i - 1),"
@@ -332,12 +315,11 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = (
         base_q.select(
             "q_id",
-            "q_emb",
-            "q_nrm",
+            *q.names,
             "bucket",
             F.explode_outer(F.sequence(F.lit(0), F.lit(LSH_DIMS))).alias("i"),
         )
-        .select("q_id", "q_emb", "q_nrm", flip.alias("bucket"))
+        .select("q_id", *q.names, flip.alias("bucket"))
     )
     pairs = (
         emb.join(F.broadcast(queries), "bucket")
@@ -345,12 +327,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                _norm(F.col("embedding")),
-            ).alias("cos"),
+            cosine_normed(q, inline("embedding")).alias("cos"),
         )
         # round 10: the `.distinct()` here was a NO-OP paying a full
         # corpus-sized Exchange + hash aggregate (guide §2.4: distinct
@@ -393,7 +370,7 @@ WITH emb AS (
          END AS bucket
   FROM base_q, range(0, {LSH_DIMS + 1}) t(i)
 ), pairs AS (
-  SELECT DISTINCT q_id, b.vec_id AS vec_id, {_SQL_COS.replace("a.embedding", "q_emb").replace("b.embedding", "b.embedding")} AS cos
+  SELECT DISTINCT q_id, b.vec_id AS vec_id, {sql_cos("q_emb", "b.embedding")} AS cos
   FROM queries JOIN emb b USING (bucket)
   WHERE b.vec_id <> q_id
 )
@@ -403,19 +380,6 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
       FROM pairs)
 WHERE rnk <= {TOP_K}
 """
-
-
-def _l2sq(a, b):
-    """Σ (aᵢ-bᵢ)² as a double fold — same association order as the
-    oracle's list_reduce, so assignments are bit-identical."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -430,38 +394,6 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_search(emb, centroids)
 
 
-def _cents_lit_of(cents: list) -> F.Column:
-    """nlist×d centroid rows (sorted by centroid_id) → ONE literal
-    array<struct<centroid_id, c_emb>> column — constant-folded once,
-    referenced by name (inlining the 1k-node literal tree into every
-    consumer measurably bloats planning/eval)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(int(c["centroid_id"]))
-                .cast("bigint")
-                .alias("centroid_id"),
-                F.array(*[F.lit(float(v)) for v in c["c_emb"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-
-
-def _cent_scored(emb_col: F.Column) -> F.Column:
-    """Per-centroid (d2, centroid_id) structs against the `cents`
-    literal column; struct min/sort ≡ ORDER BY d2, centroid_id."""
-    return F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            _l2sq(emb_col, c["c_emb"]).alias("d2"),
-            c["centroid_id"].alias("centroid_id"),
-        ),
-    )
-
-
 def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     """Probe-and-rerank against any (centroid_id, c_emb) coarse list
     set; the IVF plan shape is independent of how the lists were
@@ -472,62 +404,47 @@ def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     # (d2, centroid_id), matching the oracle's row_number order). The
     # crossJoin+groupBy shape would re-shuffle the corpus by vec_id —
     # the corpus now reaches the bucket join with NO exchange at all.
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cents_lit = _cents_lit_of(cents)
-    scored = _cent_scored
-
+    panel = Panel(sorted(centroids.collect(), key=lambda r: r["centroid_id"]))
+    # per-row norm hoisted below the probe join (round 10,
+    # `cosine_normed`): folded once per row, not once per pair
+    e = normed("embedding", "nrm")
     assigned = (
-        emb.withColumn("cents", cents_lit)
+        panel.bind(emb)
         .select(
             "vec_id",
-            "embedding",
-            F.array_min(scored(F.col("embedding"))).alias("best"),
-            # per-row norm hoisted below the probe join (round 10,
-            # `_dot_cos_pre`): folded once per row, not once per pair
-            _norm(F.col("embedding")).alias("nrm"),
+            F.array_min(panel.l2sq(F.col("embedding"))).alias("best"),
+            *e.cols,
         )
         .select(
             "vec_id",
             F.col("best.centroid_id").alias("list_id"),
-            "embedding",
-            "nrm",
+            *e.names,
         )
     )
     # probe selection is map-only too: sort the same struct array
     # (lexicographic ≡ ORDER BY d2, centroid_id) and explode the first
     # nprobe entries — no crossJoin, no window
+    q = normed("q_emb", "q_nrm", F.col("embedding"))
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), *q.cols
     )
     probes = (
-        queries.withColumn("cents", cents_lit)
+        panel.bind(queries)
         .select(
             "q_id",
-            "q_emb",
-            "q_nrm",
+            *q.names,
             F.explode(
-                F.slice(F.array_sort(scored(F.col("q_emb"))), 1, IVF_NPROBE)
+                F.slice(
+                    F.array_sort(panel.l2sq(F.col("q_emb"))), 1, IVF_NPROBE
+                )
             ).alias("pr"),
         )
-        .select(
-            "q_id", "q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id")
-        )
+        .select("q_id", *q.names, F.col("pr.centroid_id").alias("list_id"))
     )
     pairs = (
         assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
-        )
+        .select("q_id", "vec_id", cosine_normed(q, e).alias("cos"))
     )
     # round 10: left as a single window — Spark 4.1 plans this
     # rank+filter shape with WindowGroupLimit(Partial) before the
@@ -541,11 +458,6 @@ def _ivf_search(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-_SQL_L2SQ = """list_reduce(list_transform(range(1, 1 + len({a})),
-  i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))
-     * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))),
-  (x, y) -> x + y)"""
-
 _ANN_IVF_SQL = f"""
 WITH cent AS (
   SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings
@@ -556,7 +468,7 @@ WITH cent AS (
   FROM (SELECT e.vec_id, e.embedding, c.centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("e.embedding", "c.c_emb")},
                           c.centroid_id) AS rn
         FROM embeddings e CROSS JOIN cent c)
   WHERE rn = 1
@@ -566,14 +478,14 @@ WITH cent AS (
                c.centroid_id AS list_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("q.embedding", "c.c_emb")},
                           c.centroid_id) AS pr
         FROM embeddings q CROSS JOIN cent c
         WHERE q.vec_id < {N_QUERIES})
   WHERE pr <= {IVF_NPROBE}
 ), pairs AS (
   SELECT q_id, b.vec_id AS vec_id,
-         {_SQL_COS.replace("a.embedding", "q_emb").replace("b.embedding", "b.embedding")} AS cos
+         {sql_cos("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
   WHERE b.vec_id <> q_id
 )
@@ -614,40 +526,17 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("c_emb"),
     )
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cents_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(c["centroid_id"]))
-                .cast("bigint")
-                .alias("centroid_id"),
-                F.array(*[F.lit(float(v)) for v in c["c_emb"]]).alias(
-                    "c_emb"
-                ),
-            )
-            for c in cents
-        ]
-    )
-
-    def scored(emb_col):
-        return F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                _l2sq(emb_col, c["c_emb"]).alias("d2"),
-                c["centroid_id"].alias("centroid_id"),
-            ),
-        )
-
+    panel = Panel(sorted(centroids.collect(), key=lambda r: r["centroid_id"]))
+    # per-row norm hoisted below the probe join (round 10,
+    # `cosine_normed`): folded once per row, not once per pair
+    e = normed("embedding", "nrm")
     assigned = (
-        emb.withColumn("cents", cents_lit)
+        panel.bind(emb)
         .select(
             "vec_id",
-            "embedding",
             "label",
-            F.array_min(scored(F.col("embedding"))).alias("best"),
-            # per-row norm hoisted below the probe join (round 10,
-            # `_dot_cos_pre`): folded once per row, not once per pair
-            _norm(F.col("embedding")).alias("nrm"),
+            F.array_min(panel.l2sq(F.col("embedding"))).alias("best"),
+            *e.cols,
         )
         .select(
             "vec_id",
@@ -657,42 +546,28 @@ def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nrm",
         )
     )
+    q = normed("q_emb", "q_nrm", F.col("embedding"))
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), *q.cols
     )
     probes = (
-        queries.withColumn("cents", cents_lit)
+        panel.bind(queries)
         .select(
             "q_id",
-            "q_emb",
-            "q_nrm",
+            *q.names,
             F.explode(
                 F.slice(
-                    F.array_sort(scored(F.col("q_emb"))), 1, FILTER_NPROBE
+                    F.array_sort(panel.l2sq(F.col("q_emb"))), 1, FILTER_NPROBE
                 )
             ).alias("pr"),
         )
-        .select(
-            "q_id", "q_emb", "q_nrm", F.col("pr.centroid_id").alias("list_id")
-        )
+        .select("q_id", *q.names, F.col("pr.centroid_id").alias("list_id"))
     )
     pairs = (
         assigned.filter(F.col("label") == FILTER_LABEL)
         .join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            "label",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
-        )
+        .select("q_id", "vec_id", "label", cosine_normed(q, e).alias("cos"))
     )
     # round 10: single window kept — WindowGroupLimit(Partial) already
     # does the map-side top-k here; see _adc_shortlist's docstring
@@ -720,7 +595,7 @@ WITH cent AS (
                c.centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("e.embedding", "c.c_emb")},
                           c.centroid_id) AS rn
         FROM embeddings e CROSS JOIN cent c)
   WHERE rn = 1
@@ -730,14 +605,14 @@ WITH cent AS (
                c.centroid_id AS list_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("q.embedding", "c.c_emb")},
                           c.centroid_id) AS pr
         FROM embeddings q CROSS JOIN cent c
         WHERE q.vec_id < {N_QUERIES})
   WHERE pr <= {FILTER_NPROBE}
 ), pairs AS (
   SELECT q_id, b.vec_id AS vec_id, b.label AS label,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cos
+         {sql_cos("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
   WHERE b.vec_id <> q_id AND b.label = {FILTER_LABEL}
 )
@@ -1081,7 +956,7 @@ emb AS (
   FROM patted
 ),
 pairs AS (
-  SELECT a.vec_id AS src, b.vec_id AS dst, {_SQL_COS} AS cos
+  SELECT a.vec_id AS src, b.vec_id AS dst, {sql_cos("a.embedding", "b.embedding")} AS cos
   FROM emb a JOIN emb b USING (pat, sub)
   WHERE a.vec_id <> b.vec_id
 ),
@@ -1138,31 +1013,18 @@ def ann_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph = knn_graph_cached(spark, sf_dir).filter(
         F.col("src") < N_QUERIES
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        # per-row norm hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
-    )
+    # per-row norm hoisted below the pair join (round 10,
+    # `cosine_normed`): folded once per row, not once per pair
+    e = normed("embedding", "nrm")
+    q = e.renamed("q_emb", "q_nrm")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", *e.cols)
     panel = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), *q.cols
     )
     scored = (
         emb.crossJoin(F.broadcast(panel))
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
-        )
+        .select("q_id", "vec_id", cosine_normed(q, e).alias("cos"))
     )
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos").desc(), F.col("vec_id")
@@ -1237,7 +1099,7 @@ rk AS (
          ROW_NUMBER() OVER (PARTITION BY q_id
                             ORDER BY cos DESC, vec_id) AS rn
   FROM (SELECT q_id, b.vec_id,
-               {_sql_cos("q_emb", "b.embedding")} AS cos
+               {sql_cos("q_emb", "b.embedding")} AS cos
         FROM q JOIN embeddings b ON b.vec_id <> q_id)
 ),
 ex AS (
@@ -1449,7 +1311,7 @@ def emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "adc_fp",
-            _l2sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
+            l2_distance_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
@@ -1476,12 +1338,12 @@ WITH sub AS (
     SELECT v.vec_id, v.s, c.j,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id, v.s
-             ORDER BY {_SQL_L2SQ.format(a="v.sv", b="c.sv")}, c.j) AS rn
+             ORDER BY {sql_l2sq("v.sv", "c.sv")}, c.j) AS rn
     FROM sub v JOIN cbi c ON v.s = c.s)
   WHERE rn = 1
 ), qtab AS (
   SELECT q.vec_id AS q_id, q.s, c.j,
-         CAST(floor({_SQL_L2SQ.format(a="q.sv", b="c.sv")} * {PQ_FP})
+         CAST(floor({sql_l2sq("q.sv", "c.sv")} * {PQ_FP})
               AS BIGINT) AS dfp
   FROM sub q JOIN cbi c ON q.s = c.s
   WHERE q.vec_id < {N_QUERIES}
@@ -1498,7 +1360,7 @@ WITH sub AS (
   WHERE srnk <= {PQ_SHORTLIST}
 ), reranked AS (
   SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {_SQL_L2SQ.format(a='q.embedding', b='b.embedding')} AS d2
+         {sql_l2sq('q.embedding', 'b.embedding')} AS d2
   FROM shortlist s
   JOIN embeddings b ON b.vec_id = s.vec_id
   JOIN embeddings q ON q.vec_id = s.q_id
@@ -1541,8 +1403,9 @@ def ann_index_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect(),
         key=lambda r: r["centroid_id"],
     )
-    assigned = emb.withColumn("cents", _cents_lit_of(cents)).select(
-        F.array_min(_cent_scored(F.col("embedding")))["centroid_id"].alias(
+    panel = Panel(cents)
+    assigned = panel.bind(emb).select(
+        F.array_min(panel.l2sq(F.col("embedding")))["centroid_id"].alias(
             "list_id"
         )
     )
@@ -1575,7 +1438,7 @@ WITH cent AS (
   FROM (SELECT e.vec_id, c.centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("e.embedding", "c.c_emb")},
                           c.centroid_id) AS rn
         FROM embeddings e CROSS JOIN cent c)
   WHERE rn = 1
@@ -1616,40 +1479,37 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < IVF_NLIST).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_emb")
     )
-    cents = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    cents_lit = _cents_lit_of(cents)
+    panel = Panel(sorted(centroids.collect(), key=lambda r: r["centroid_id"]))
     max_probe = max(NPROBE_GRID)
-    assigned = emb.withColumn("cents", cents_lit).select(
+    # per-row norm hoisted below the probe join (round 10,
+    # `cosine_normed`): folded once per row, not once per pair
+    e = normed("embedding", "nrm")
+    assigned = panel.bind(emb).select(
         "vec_id",
-        "embedding",
-        F.array_min(_cent_scored(F.col("embedding")))["centroid_id"].alias(
+        e.cols[0],
+        F.array_min(panel.l2sq(F.col("embedding")))["centroid_id"].alias(
             "list_id"
         ),
-        # per-row norm hoisted below the probe join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
+        e.cols[1],
     )
+    q = normed("q_emb", "q_nrm", F.col("embedding"))
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), *q.cols
     )
     probes = (
-        queries.withColumn("cents", cents_lit)
+        panel.bind(queries)
         .select(
             "q_id",
-            "q_emb",
-            "q_nrm",
+            *q.names,
             F.posexplode(
                 F.slice(
-                    F.array_sort(_cent_scored(F.col("q_emb"))), 1, max_probe
+                    F.array_sort(panel.l2sq(F.col("q_emb"))), 1, max_probe
                 )
             ).alias("p0", "pr"),
         )
         .select(
             "q_id",
-            "q_emb",
-            "q_nrm",
+            *q.names,
             (F.col("p0") + 1).cast("int").alias("p"),  # 1-based probe rank
             F.col("pr.centroid_id").alias("list_id"),
         )
@@ -1657,17 +1517,7 @@ def ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            "p",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
-        )
+        .select("q_id", "vec_id", "p", cosine_normed(q, e).alias("cos"))
     )
     grid = spark.createDataFrame(
         [(int(v),) for v in NPROBE_GRID], "nprobe int"
@@ -1734,7 +1584,7 @@ WITH cent AS (
   FROM (SELECT e.vec_id, e.embedding, c.centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("e.embedding", "c.c_emb")},
                           c.centroid_id) AS rn
         FROM embeddings e CROSS JOIN cent c)
   WHERE rn = 1
@@ -1744,14 +1594,14 @@ WITH cent AS (
                c.centroid_id AS list_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("q.embedding", "c.c_emb")},
                           c.centroid_id) AS pr
         FROM embeddings q CROSS JOIN cent c
         WHERE q.vec_id < {N_QUERIES})
   WHERE pr <= {max(NPROBE_GRID)}
 ), pairs AS (
   SELECT q_id, b.vec_id AS vec_id, p,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cos
+         {sql_cos("q_emb", "b.embedding")} AS cos
   FROM probes JOIN assigned b USING (list_id)
   WHERE b.vec_id <> q_id
 ), grid(nprobe) AS (VALUES {grid_rows}),
@@ -1810,9 +1660,10 @@ def ann_ivf_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect(),
         key=lambda r: r["centroid_id"],
     )
-    assigned = emb.withColumn("cents", _cents_lit_of(cents)).select(
+    panel = Panel(cents)
+    assigned = panel.bind(emb).select(
         "vec_id",
-        F.array_min(_cent_scored(F.col("embedding")))["centroid_id"].alias(
+        F.array_min(panel.l2sq(F.col("embedding")))["centroid_id"].alias(
             "list_id"
         ),
     )
@@ -1853,7 +1704,7 @@ WITH cent AS (
   FROM (SELECT e.vec_id, c.centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("e.embedding", "c.c_emb")},
                           c.centroid_id) AS rn
         FROM embeddings e CROSS JOIN cent c)
   WHERE rn = 1
@@ -1973,7 +1824,7 @@ WITH sub AS (
   FROM sub WHERE vec_id < {PQ_K}
 ), errs AS (
   SELECT v.vec_id, v.s,
-         CAST(floor(MIN({_SQL_L2SQ.format(a="v.sv", b="c.sv")})
+         CAST(floor(MIN({sql_l2sq("v.sv", "c.sv")})
                     * {PQERR_FP}) AS BIGINT) AS err_fp
   FROM sub v JOIN cbi c ON v.s = c.s
   GROUP BY v.vec_id, v.s
@@ -2032,7 +1883,7 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect(),
         key=lambda r: r["centroid_id"],
     )
-    cents_lit = _cents_lit_of(cents)
+    panel = Panel(cents)
     cb, ks = _pq_codebook(emb)
     q_rows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
     qtabs = _pq_query_tables(q_rows, cb, ks)
@@ -2050,10 +1901,10 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # It is also semantically the faiss-faithful artifact: the
     # PQ-coded index is MATERIALIZED once at build time, then scanned.
     coded = (
-        emb.withColumn("cents", cents_lit)
+        panel.bind(emb)
         .select(
             "vec_id",
-            F.array_min(_cent_scored(F.col("embedding")))[
+            F.array_min(panel.l2sq(F.col("embedding")))[
                 "centroid_id"
             ].alias("list_id"),
             F.expr(_pq_encode_sql(cb, ks)).alias("codes"),
@@ -2064,12 +1915,12 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     probes = (
-        queries.withColumn("cents", cents_lit)
+        panel.bind(queries)
         .select(
             "q_id",
             F.explode(
                 F.slice(
-                    F.array_sort(_cent_scored(F.col("q_emb"))), 1, IVF_NPROBE
+                    F.array_sort(panel.l2sq(F.col("q_emb"))), 1, IVF_NPROBE
                 )
             ).alias("pr"),
         )
@@ -2098,7 +1949,7 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "adc_fp",
-            _l2sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
+            l2_distance_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
@@ -2121,7 +1972,7 @@ WITH cent AS (
   FROM (SELECT e.vec_id, c.centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("e.embedding", "c.c_emb")},
                           c.centroid_id) AS rn
         FROM embeddings e CROSS JOIN cent c)
   WHERE rn = 1
@@ -2130,7 +1981,7 @@ WITH cent AS (
   FROM (SELECT q.vec_id AS q_id, c.centroid_id AS list_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("q.embedding", "c.c_emb")},
                           c.centroid_id) AS pr
         FROM embeddings q CROSS JOIN cent c
         WHERE q.vec_id < {N_QUERIES})
@@ -2147,12 +1998,12 @@ WITH cent AS (
     SELECT v.vec_id, v.s, c.j,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id, v.s
-             ORDER BY {_SQL_L2SQ.format(a="v.sv", b="c.sv")}, c.j) AS rn
+             ORDER BY {sql_l2sq("v.sv", "c.sv")}, c.j) AS rn
     FROM sub v JOIN cbi c ON v.s = c.s)
   WHERE rn = 1
 ), qtab AS (
   SELECT q.vec_id AS q_id, q.s, c.j,
-         CAST(floor({_SQL_L2SQ.format(a="q.sv", b="c.sv")} * {PQ_FP})
+         CAST(floor({sql_l2sq("q.sv", "c.sv")} * {PQ_FP})
               AS BIGINT) AS dfp
   FROM sub q JOIN cbi c ON q.s = c.s
   WHERE q.vec_id < {N_QUERIES}
@@ -2172,7 +2023,7 @@ WITH cent AS (
   WHERE srnk <= {PQ_SHORTLIST}
 ), reranked AS (
   SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {_SQL_L2SQ.format(a='q.embedding', b='b.embedding')} AS d2
+         {sql_l2sq('q.embedding', 'b.embedding')} AS d2
   FROM shortlist s
   JOIN embeddings b ON b.vec_id = s.vec_id
   JOIN embeddings q ON q.vec_id = s.q_id
@@ -2216,7 +2067,7 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect(),
         key=lambda r: r["centroid_id"],
     )
-    cents_lit = _cents_lit_of(cents)
+    panel = Panel(cents)
     cmap = {int(c["centroid_id"]): [float(x) for x in c["c_emb"]] for c in cents}
     # The positional element_at(_cbc, list_id + 1) below is only correct
     # while centroid ids are exactly the dense vec_ids 0..IVF_NLIST-1
@@ -2228,18 +2079,13 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"got {sorted(cmap)}"
     )
     # centroid embeddings indexed by list_id for the residual subtract
-    cbyid = F.array(
-        *[
-            F.array(*[F.lit(v) for v in cmap[cid]])
-            for cid in sorted(cmap)
-        ]
-    )
+    cbyid = vectors_lit(cmap[cid] for cid in sorted(cmap))
     resid = (
-        emb.withColumn("cents", cents_lit)
+        panel.bind(emb)
         .select(
             "vec_id",
             "embedding",
-            F.array_min(_cent_scored(F.col("embedding")))[
+            F.array_min(panel.l2sq(F.col("embedding")))[
                 "centroid_id"
             ].alias("list_id"),
         )
@@ -2332,7 +2178,7 @@ def ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "vec_id",
             "adc_fp",
-            _l2sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
+            l2_distance_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
@@ -2360,7 +2206,7 @@ WITH cent AS (
   FROM (SELECT e.vec_id, c.centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="e.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("e.embedding", "c.c_emb")},
                           c.centroid_id) AS rn
         FROM embeddings e CROSS JOIN cent c)
   WHERE rn = 1
@@ -2382,7 +2228,7 @@ WITH cent AS (
     SELECT v.vec_id, v.list_id, v.s, c.j,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id, v.s
-             ORDER BY {_SQL_L2SQ.format(a="v.sv", b="c.sv")}, c.j) AS rn
+             ORDER BY {sql_l2sq("v.sv", "c.sv")}, c.j) AS rn
     FROM sub v JOIN cbi c ON v.s = c.s)
   WHERE rn = 1
 ), probes AS (
@@ -2390,7 +2236,7 @@ WITH cent AS (
   FROM (SELECT q.vec_id AS q_id, c.centroid_id AS list_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_SQL_L2SQ.format(a="q.embedding", b="c.c_emb")},
+                 ORDER BY {sql_l2sq("q.embedding", "c.c_emb")},
                           c.centroid_id) AS pr
         FROM embeddings q CROSS JOIN cent c
         WHERE q.vec_id < {N_QUERIES})
@@ -2407,7 +2253,7 @@ WITH cent AS (
   FROM qres, UNNEST(range(0, {PQ_M})) AS t(s)
 ), qtab AS (
   SELECT q.q_id, q.list_id, q.s, c.j,
-         CAST(floor({_SQL_L2SQ.format(a="q.sv", b="c.sv")} * {PQ_FP})
+         CAST(floor({sql_l2sq("q.sv", "c.sv")} * {PQ_FP})
               AS BIGINT) AS dfp
   FROM qsub q JOIN cbi c ON q.s = c.s
 ), adc AS (
@@ -2424,7 +2270,7 @@ WITH cent AS (
   WHERE srnk <= {PQ_SHORTLIST}
 ), reranked AS (
   SELECT s.q_id, s.vec_id, CAST(s.adc_fp AS BIGINT) AS adc_fp,
-         {_SQL_L2SQ.format(a='q.embedding', b='b.embedding')} AS d2
+         {sql_l2sq('q.embedding', 'b.embedding')} AS d2
   FROM shortlist s
   JOIN embeddings b ON b.vec_id = s.vec_id
   JOIN embeddings q ON q.vec_id = s.q_id
@@ -2474,7 +2320,7 @@ def ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _l2sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
+            l2_distance_sq(F.col("q_emb"), F.col("embedding")).alias("d2"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("d2", "vec_id")
@@ -2514,7 +2360,7 @@ ex AS (
   FROM (SELECT q_id, b.vec_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q_id
-                 ORDER BY {_SQL_L2SQ.format(a="q_emb", b="b.embedding")},
+                 ORDER BY {sql_l2sq("q_emb", "b.embedding")},
                           b.vec_id) AS rn
         FROM exq JOIN embeddings b ON b.vec_id <> q_id)
   WHERE rn <= {TOP_K}
@@ -2544,23 +2390,22 @@ def emb_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per search."""
     # both the full-dim and the truncated norms — AND the truncated
     # slice itself — are hoisted to per-row columns below the pair join
-    # (round 10, `_dot_cos_pre`): same folds over the same (sliced)
+    # (round 10, `cosine_normed`): same folds over the same (sliced)
     # arrays — bit-identical — evaluated/allocated once per row instead
     # of once per pair; this entry folded FOUR norms and cut TWO array
     # slices per pair inline
+    e = normed("embedding", "nrm")
+    t = normed("temb", "tnrm", F.slice(F.col("embedding"), 1, TRUNC_DIMS))
+    q, qt = e.renamed("q_emb", "q_nrm"), t.renamed("qt_emb", "q_tnrm")
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        F.slice(F.col("embedding"), 1, TRUNC_DIMS).alias("temb"),
-        _norm(F.col("embedding")).alias("nrm"),
-        _norm(F.slice(F.col("embedding"), 1, TRUNC_DIMS)).alias("tnrm"),
+        "vec_id", e.cols[0], t.cols[0], e.cols[1], t.cols[1]
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("temb").alias("qt_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("tnrm").alias("q_tnrm"),
+        q.cols[0],
+        qt.cols[0],
+        q.cols[1],
+        qt.cols[1],
     )
     scored = (
         emb.crossJoin(F.broadcast(queries))
@@ -2568,18 +2413,8 @@ def emb_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cf"),
-            _dot_cos_pre(
-                F.col("qt_emb"),
-                F.col("temb"),
-                F.col("q_tnrm"),
-                F.col("tnrm"),
-            ).alias("ct"),
+            cosine_normed(q, e).alias("cf"),
+            cosine_normed(qt, t).alias("ct"),
         )
     )
     # both top-k picks in one pass over one salted exchange (round 10)
@@ -2625,7 +2460,7 @@ WITH queries AS (
   WHERE vec_id < {N_QUERIES}
 ), scored AS (
   SELECT q_id, b.vec_id AS vec_id,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cf,
+         {sql_cos("q_emb", "b.embedding")} AS cf,
          {_trunc_cos_sql(TRUNC_DIMS)} AS ct
   FROM queries JOIN embeddings b ON b.vec_id <> q_id
 ), ranked AS (
@@ -2783,21 +2618,23 @@ def emb_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision is oracle-gated data. Packing is map-only engine-side SQL
     (no Python); at index time the packed column is what you'd
     materialize — 16 bytes/vector."""
+    # per-row norm hoisted below the pair join (round 10,
+    # `cosine_normed`): folded once per row, not once per pair
+    e = normed("embedding", "nrm")
+    q = e.renamed("q_emb", "q_nrm")
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
-        "embedding",
+        e.cols[0],
         F.expr(_pack_bits_expr("embedding", 0)).alias("b_lo"),
         F.expr(_pack_bits_expr("embedding", _HAM_HALF)).alias("b_hi"),
-        # per-row norm hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
+        e.cols[1],
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
+        q.cols[0],
         F.col("b_lo").alias("q_lo"),
         F.col("b_hi").alias("q_hi"),
-        F.col("nrm").alias("q_nrm"),
+        q.cols[1],
     )
     scored = (
         emb.crossJoin(F.broadcast(queries))
@@ -2805,12 +2642,7 @@ def emb_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_normed(q, e).alias("cos"),
             F.expr(
                 "bit_count(b_lo ^ q_lo) + bit_count(b_hi ^ q_hi)"
             ).alias("ham"),
@@ -2856,7 +2688,7 @@ WITH emb AS (
   FROM emb WHERE vec_id < {N_QUERIES}
 ), scored AS (
   SELECT q_id, b.vec_id AS vec_id,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cos,
+         {sql_cos("q_emb", "b.embedding")} AS cos,
          bit_count(xor(b.b_lo, q_lo)) + bit_count(xor(b.b_hi, q_hi)) AS ham
   FROM queries JOIN emb b ON b.vec_id <> q_id
 ), ranked AS (
@@ -2930,23 +2762,20 @@ def emb_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rembedding"),
     )
     # per-row norms (exact AND reconstructed) hoisted below the pair
-    # join (round 10, `_dot_cos_pre`): this entry folded FOUR norms per
+    # join (round 10, `cosine_normed`): this entry folded FOUR norms per
     # pair inline — including a norm over the derived rembedding, whose
     # reconstruction transform the fold re-walked per pair — so the
     # hoist removes 2/3 of its interpreted per-pair work. Separate
     # select above `recon` so r_nrm references the named rembedding
     # column rather than inlining the transform a second time.
+    e = normed("embedding", "e_nrm")
+    r = normed("rembedding", "r_nrm")
+    q = normed("q_emb", "q_nrm", F.col("embedding"))
     recon = recon.select(
-        "vec_id",
-        "embedding",
-        "rembedding",
-        _norm(F.col("embedding")).alias("e_nrm"),
-        _norm(F.col("rembedding")).alias("r_nrm"),
+        "vec_id", e.cols[0], r.cols[0], e.cols[1], r.cols[1]
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        _norm(F.col("embedding")).alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), *q.cols
     )
     scored = (
         recon.crossJoin(F.broadcast(queries))
@@ -2954,18 +2783,8 @@ def emb_quantize_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("e_nrm"),
-            ).alias("cx"),
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("rembedding"),
-                F.col("q_nrm"),
-                F.col("r_nrm"),
-            ).alias("cr"),
+            cosine_normed(q, e).alias("cx"),
+            cosine_normed(q, r).alias("cr"),
         )
     )
     # round 10: the two_phase_rank_dual rewrite its siblings took
@@ -3026,7 +2845,7 @@ queries AS (
 ),
 scored AS (
   SELECT q_id, b.vec_id AS vec_id,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cx,
+         {sql_cos("q_emb", "b.embedding")} AS cx,
          (
   list_reduce(list_transform(range(1, 1 + len(q_emb)),
     i -> CAST(q_emb[i] AS DOUBLE) * r.rembedding[i]),
@@ -3134,11 +2953,9 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         _sign_bucket(F.col("embedding"), LSH_DIMS).alias("bucket"),
     )
+    q = normed("q_emb", "q_nrm", F.col("embedding"))
     base_q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        "bucket",
-        _norm(F.col("embedding")).alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), q.cols[0], "bucket", q.cols[1]
     )
     flip = F.expr(
         "CASE WHEN i = 0 THEN bucket ELSE concat(substring(bucket, 1, i - 1),"
@@ -3147,23 +2964,17 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = base_q.select(
         "q_id",
-        "q_emb",
-        "q_nrm",
+        *q.names,
         "bucket",
         F.explode_outer(F.sequence(F.lit(0), F.lit(LSH_DIMS))).alias("i"),
-    ).select("q_id", "q_emb", "q_nrm", flip.alias("bucket"))
+    ).select("q_id", *q.names, flip.alias("bucket"))
     return (
         emb.join(F.broadcast(queries), "bucket")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             "vec_id",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                _norm(F.col("embedding")),
-            ).alias("cos"),
+            cosine_normed(q, inline("embedding")).alias("cos"),
         )
         # round 10: `.distinct()` removed — same no-op-dedup argument
         # as ann_topk_lsh (one bucket per vector, pairwise-distinct
@@ -3191,7 +3002,7 @@ WITH emb AS (
          END AS bucket
   FROM base_q, range(0, {LSH_DIMS + 1}) t(i)
 ), pairs AS (
-  SELECT DISTINCT q_id, b.vec_id AS vec_id, {_SQL_COS.replace("a.embedding", "q_emb").replace("b.embedding", "b.embedding")} AS cos
+  SELECT DISTINCT q_id, b.vec_id AS vec_id, {sql_cos("q_emb", "b.embedding")} AS cos
   FROM queries JOIN emb b USING (bucket)
   WHERE b.vec_id <> q_id
 )
@@ -3213,17 +3024,13 @@ def _mmr_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     side + rank window — the ann_topk_bruteforce plan). Factored out so
     the test can replay the greedy loop in pure Python on the SAME
     Spark-computed relevance values."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        # per-row norm hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
-    )
+    # per-row norm hoisted below the pair join (round 10,
+    # `cosine_normed`): folded once per row, not once per pair
+    e = normed("embedding", "nrm")
+    q = e.renamed("q_emb", "q_nrm")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", *e.cols)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), *q.cols
     )
     pairs = (
         emb.crossJoin(F.broadcast(queries))
@@ -3233,12 +3040,7 @@ def _mmr_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_emb",
             "vec_id",
             "embedding",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("rel"),
+            cosine_normed(q, e).alias("rel"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("rel").desc(), F.col("vec_id"))
@@ -3328,19 +3130,15 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     swaps to the IVF shortlist exactly as ann_recall_audit composes
     it; the contract (per-query top-k with label exclusion) is
     unchanged."""
+    # per-row norm hoisted below the pair join (round 10,
+    # `cosine_normed`): folded once per row, not once per pair
+    e = normed("embedding", "nrm")
+    q = e.renamed("q_emb", "q_nrm")
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "embedding",
-        "label",
-        # per-row norm hoisted below the pair join (round 10,
-        # `_dot_cos_pre`): folded once per row, not once per pair
-        _norm(F.col("embedding")).alias("nrm"),
+        "vec_id", *e.cols, "label"
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("label").alias("q_label"),
-        F.col("nrm").alias("q_nrm"),
+        F.col("vec_id").alias("q_id"), *q.cols, F.col("label").alias("q_label")
     )
     pairs = (
         emb.crossJoin(F.broadcast(queries))
@@ -3350,12 +3148,7 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             "vec_id",
             "label",
-            _dot_cos_pre(
-                F.col("q_emb"),
-                F.col("embedding"),
-                F.col("q_nrm"),
-                F.col("nrm"),
-            ).alias("cos"),
+            cosine_normed(q, e).alias("cos"),
         )
     )
     # round 10: `pairs` used to feed the negatives window AND a
@@ -3402,7 +3195,7 @@ WITH queries AS (
   FROM embeddings WHERE vec_id < {N_QUERIES}
 ), pairs AS (
   SELECT q_id, q_label, b.vec_id AS vec_id, b.label AS label,
-         {_SQL_COS.replace("a.embedding", "q_emb")} AS cos
+         {sql_cos("q_emb", "b.embedding")} AS cos
   FROM queries JOIN embeddings b ON b.vec_id <> q_id
 ), pos AS (
   SELECT q_id, MAX(cos) AS cos_pos FROM pairs
@@ -3446,7 +3239,7 @@ def emb_pair_cosine_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     size at any SF. Pairing is lead() over the capped md5 order
     (consecutive ranks — md5 order decorrelates ids, so pairs are
     effectively random); cosine is the shared bit-identical double
-    fold (`_dot_cos` ↔ `_sql_cos`)."""
+    fold (`cosine_similarity` ↔ `sql_cos`)."""
     vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -3491,7 +3284,7 @@ def emb_pair_cosine_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("vec_id").over(Window.orderBy("rn")).alias("b_id"),
         F.lead("embedding").over(Window.orderBy("rn")).alias("b_emb"),
     ).filter((F.col("rn") % 2 == 1) & F.col("b_id").isNotNull())
-    cos = _dot_cos(F.col("embedding"), F.col("b_emb"))
+    cos = cosine_similarity(F.col("embedding"), F.col("b_emb"))
     bucketed = paired.select(
         F.least(
             F.floor((cos + 1.0) / 0.1).cast("int"),
@@ -3527,7 +3320,7 @@ WITH gated AS (
   FROM sample
   QUALIFY rn % 2 = 1 AND b_id IS NOT NULL
 ), buckets AS (
-  SELECT LEAST(CAST(FLOOR(({_sql_cos("a_emb", "b_emb")} + 1.0) / 0.1)
+  SELECT LEAST(CAST(FLOOR(({sql_cos("a_emb", "b_emb")} + 1.0) / 0.1)
                     AS INT), {CAL_COS_BUCKETS - 1}) AS bucket
   FROM paired
 )

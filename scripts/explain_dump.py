@@ -10,17 +10,52 @@ plan claim in OPTIMIZATION_r10.md is backed by committed
 Writes plans/r10/<key>_<tag>.txt for each key. Plans are built (not
 executed) — safe to run without contaminating timed measurements, but
 the guard still refuses while another Spark JVM is alive.
+
+Expression ids (``#123``), lambda-variable counters (``x_5``) and
+exchange plan ids (``plan_id=42``) come from session-global counters,
+so two builds of the same plan print different numbers. ``renumber``
+rewrites all three in order of first appearance: two dumps of the same
+plan then diff cleanly, and every cross-reference inside one dump still
+points at the same expression.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 from _guard import assert_no_spark_jvm  # noqa: E402
+
+
+_EXPR_ID = re.compile(r"#(\d+)")
+_LAMBDA_VAR = re.compile(r"(lambda \w+?)_(\d+)#")
+_PLAN_ID = re.compile(r"plan_id=(\d+)")
+
+
+def _by_first_appearance(pattern: re.Pattern, text: str, fmt) -> str:
+    seen: dict[str, int] = {}
+
+    def sub(m: re.Match) -> str:
+        n = seen.setdefault(m.group(m.lastindex), len(seen))
+        return fmt(m, n)
+
+    return pattern.sub(sub, text)
+
+
+def renumber(plan: str) -> str:
+    """Lambda counters first (their match includes the ``#`` of the
+    expression id that follows), then plan ids, then expression ids."""
+    plan = _by_first_appearance(
+        _LAMBDA_VAR, plan, lambda m, n: f"{m.group(1)}_{n}#"
+    )
+    plan = _by_first_appearance(
+        _PLAN_ID, plan, lambda m, n: f"plan_id={n}"
+    )
+    return _by_first_appearance(_EXPR_ID, plan, lambda m, n: f"#{n}")
 
 
 def main() -> None:
@@ -47,7 +82,7 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        plan = buf.getvalue()
+        plan = renumber(buf.getvalue())
         path = os.path.join(outdir, f"{key}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {key} — explain(formatted) at {sf_dir} [{tag}]\n")

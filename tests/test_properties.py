@@ -30,8 +30,11 @@ from blog_snapshotbackup_azuredatalake_spark.functions.hashing import (
     sql_md5_int60,
 )
 from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
+    cosine_normed,
     cosine_similarity,
     dot_product,
+    l2_distance_sq,
+    normed,
 )
 
 # no control chars (SEP itself excluded by design contract), ASCII-ish
@@ -102,10 +105,17 @@ def test_dot_and_cosine_match_python(spark, ab):
             ]
         ),
     )
-    row = df.select(
-        dot_product("a", "b").alias("dot"),
-        cosine_similarity("a", "b").alias("cos"),
-    ).collect()[0]
+    va, vb = normed("a", "na"), normed("b", "nb")
+    row = (
+        df.select(*va.cols, *vb.cols)
+        .select(
+            dot_product("a", "b").alias("dot"),
+            cosine_similarity("a", "b").alias("cos"),
+            l2_distance_sq("a", "b").alias("d2"),
+            cosine_normed(va, vb).alias("hcos"),
+        )
+        .collect()[0]
+    )
     # identical fold: left-to-right double accumulation over float32 values
     import struct
 
@@ -118,6 +128,13 @@ def test_dot_and_cosine_match_python(spark, ab):
     nb = math.sqrt(sum(f32(y) * f32(y) for y in b))
     if na * nb != 0.0:
         assert row["cos"] == dot / (na * nb)
+        assert row["hcos"] == dot / (na * nb)
+    # the hoisted norms are the same doubles: bit-identical quotient
+    assert row["hcos"] == row["cos"]
+    d2 = 0.0
+    for x, y in zip(a, b):
+        d2 += (f32(x) - f32(y)) * (f32(x) - f32(y))
+    assert row["d2"] == d2
 
 
 def test_grams_of_short_docs_are_empty(spark):

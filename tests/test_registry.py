@@ -76,3 +76,22 @@ def test_no_oracle_emits_hugeint():
         if cols:
             offenders[key] = cols
     assert not offenders, offenders
+
+
+def test_broken_module_fails_the_registry(monkeypatch):
+    """A module that cannot be imported must fail the registry loudly,
+    not silently drop its family from the bench and the driver gate."""
+    import sys
+
+    import pytest
+
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as E
+
+    monkeypatch.setitem(
+        sys.modules,
+        "blog_snapshotbackup_azuredatalake_spark.operators.sketch",
+        None,
+    )
+    with pytest.raises(ImportError):
+        E.queries()
