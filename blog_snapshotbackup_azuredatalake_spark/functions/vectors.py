@@ -37,6 +37,10 @@ inlining the literal tree into every consumer measurably bloats
 planning and evaluation). Each row scores it with ``F.transform``, so
 an argmin / argmax / top-n over the panel is a struct min / max / sort
 on (score, id): map-only, no corpus shuffle.
+
+Zero vectors. Both cosines divide with ``try_divide``, so a zero norm
+gives NULL, as the oracle's ``0.0 / 0.0`` does; plain division raises
+``DIVIDE_BY_ZERO`` under ANSI mode.
 """
 
 from __future__ import annotations
@@ -89,7 +93,7 @@ def l2_distance_sq(a: Column | str, b: Column | str) -> Column:
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+    return F.try_divide(dot_product(a, b), l2_norm(a) * l2_norm(b))
 
 
 class Normed:
@@ -137,7 +141,7 @@ def inline(vec: str) -> Normed:
 
 def cosine_normed(a: Normed, b: Normed) -> Column:
     """``cosine_similarity`` over hoisted norms: one dot fold per pair."""
-    return dot_product(a.vec, b.vec) / (a.nrm * b.nrm)
+    return F.try_divide(dot_product(a.vec, b.vec), a.nrm * b.nrm)
 
 
 def vector_lit(v: Iterable[float]) -> Column:

@@ -33,8 +33,10 @@ from blog_snapshotbackup_azuredatalake_spark.functions.vectors import (
     cosine_normed,
     cosine_similarity,
     dot_product,
+    inline,
     l2_distance_sq,
     normed,
+    sql_cos,
 )
 
 # no control chars (SEP itself excluded by design contract), ASCII-ish
@@ -79,7 +81,7 @@ def test_md5_int60_matches_duckdb(spark, s):
     assert 0 <= got < 2**60
 
 
-def _nonzero(v):  # zero-norm → ANSI divide-by-zero; real embeddings aren't
+def _nonzero(v):  # zero norms: test_zero_vector_cosine_is_null
     return any(abs(x) > 0.01 for x in v)
 
 
@@ -135,6 +137,39 @@ def test_dot_and_cosine_match_python(spark, ab):
     for x, y in zip(a, b):
         d2 += (f32(x) - f32(y)) * (f32(x) - f32(y))
     assert row["d2"] == d2
+
+
+def test_zero_vector_cosine_is_null(spark):
+    """A zero vector has no direction: the inline and the hoisted-norm
+    cosine are NULL, as the DuckDB oracle's 0.0 / 0.0 is, instead of
+    raising DIVIDE_BY_ZERO under ANSI mode."""
+    a, b = [0.0, 0.0], [3.0, 4.0]
+    df = spark.createDataFrame(
+        [(a, b)],
+        StructType(
+            [
+                StructField("a", ArrayType(FloatType())),
+                StructField("b", ArrayType(FloatType())),
+            ]
+        ),
+    )
+    va, vb = normed("a", "na"), normed("b", "nb")
+    row = (
+        df.select(*va.cols, *vb.cols)
+        .select(
+            cosine_similarity("a", "b").alias("cos"),
+            cosine_normed(va, vb).alias("hcos"),
+            cosine_normed(vb, inline("a")).alias("icos"),
+        )
+        .collect()[0]
+    )
+    assert (row["cos"], row["hcos"], row["icos"]) == (None, None, None)
+    want = duckdb.execute(
+        f"SELECT {sql_cos('a', 'b')} FROM (SELECT ?::FLOAT[] AS a,"
+        " ?::FLOAT[] AS b)",
+        [a, b],
+    ).fetchone()[0]
+    assert want is None
 
 
 def test_grams_of_short_docs_are_empty(spark):
