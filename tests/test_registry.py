@@ -80,7 +80,7 @@ def test_no_oracle_emits_hugeint():
 
 def test_broken_module_fails_the_registry(monkeypatch):
     """A module that cannot be imported must fail the registry loudly,
-    not silently drop its family from the bench and the driver gate."""
+    not silently drop its family from the benchmark and the oracle gate."""
     import sys
 
     import pytest
